@@ -45,8 +45,9 @@ final class Ctx(val spark: SparkSession, val o: Opts) {
   val rng = new scala.util.Random(o.seed)
   var setupNs = 0L
   var windowS = 0.0
-  /** Seconds over which the window's operations completed, when that is not
-    * the window itself (a stream stopped mid-batch at the window's end).
+  /** Seconds over which the window's operations ran, when that is not the
+    * window itself (a stream's sampled batches, from the first one's trigger
+    * to the last completed one's end).
     */
   var activeS: Option[Double] = None
   /** Epoch ms at which tracing was switched on inside the window. */

@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 import org.apache.spark.sql.types.StructType
 
 import graft.SparkEntry
@@ -89,7 +90,6 @@ final class EtlDashboards(ctx: Ctx) extends Workload with AdaptiveSparkPlanHelpe
           spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
       }
       val schedule = ctx.rounds(pool)
-      extra("round") = pool.size
       ctx.window {
         while (more) {
           val (key, sql, _) = schedule.next()
@@ -227,9 +227,7 @@ final class IngestOperators(ctx: Ctx) extends Workload {
       (df.schema, df.select(partCol).distinct().collect().map(_.getString(0)).sorted.toIndexedSeq)
     }
     val tbl = s"${o.work}/stream/table"
-    extra("round") = types.size // chunks come in blocks covering each partition count once
-    ctx.window {
-      val startMs = System.currentTimeMillis()
+    val (q, warmId) = untimed {
       val q = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
         .writeStream
         .foreachBatch { (df: DataFrame, batchId: Long) =>
@@ -239,31 +237,39 @@ final class IngestOperators(ctx: Ctx) extends Workload {
         }
         .option("checkpointLocation", s"${o.work}/stream/ck")
         .start()
+      // warm-up: the first micro-batch starts the stream and commits the
+      // table's first version; it is set-up, not a sample
+      def first = q.recentProgress.find(_.numInputRows > 0)
+      while (q.isActive && first.isEmpty) Thread.sleep(5)
+      (q, first.fold(-1L)(_.batchId))
+    }
+    ctx.window {
       while (more && q.isActive) Thread.sleep(5)
       q.stop()
       val failure = q.exception.map(_.toString)
-      val done = q.recentProgress.filter(_.numInputRows > 0)
+      def startOf(p: StreamingQueryProgress) = Instant.parse(p.timestamp).toEpochMilli
+      def endOf(p: StreamingQueryProgress) =
+        startOf(p) + p.durationMs.get("triggerExecution").longValue
+      val done = q.recentProgress.filter(p => p.numInputRows > 0 && p.batchId > warmId)
       done.foreach { p =>
-        ctx.recordOp("batch", "stream", p.durationMs.get("triggerExecution").doubleValue,
-          failure.isEmpty, failure.getOrElse(""),
-          Instant.parse(p.timestamp).toEpochMilli >= tracedFromMs)
+        ctx.recordOp("batch", "stream", (endOf(p) - startOf(p)).toDouble,
+          failure.isEmpty, failure.getOrElse(""), startOf(p) >= tracedFromMs)
       }
-      // throughput counts the time up to the last completed batch, not the
-      // batch the window's end cut short
-      done.lastOption.foreach { p =>
-        ctx.activeS = Some((Instant.parse(p.timestamp).toEpochMilli +
-          p.durationMs.get("triggerExecution").longValue - startMs) / 1e3)
-      }
-      if (done.isEmpty)
-        ctx.recordOp("batch", "stream", 0, ok = false, failure.getOrElse("no batch ran"), false)
+      // throughput counts the time from the first sampled batch's trigger to
+      // the end of the last completed one, not the batch the window's end
+      // cut short
+      if (done.nonEmpty) ctx.activeS = Some((endOf(done.last) - startOf(done.head)) / 1e3)
+      else ctx.recordOp("batch", "stream", 0, ok = false, failure.getOrElse("no batch ran"), false)
     }
     // seeded snapshot reads of the committed versions, with tracing on in a
     // traced run: what a reader of the table pays
     val v = ManifestTable.currentVersion(spark, tbl).getOrElse(0L)
     val reads = mutable.ArrayBuffer.empty[Map[String, Any]]
     ctx.phase("read") {
+      // one read per subset size, in seeded order: every run reads the same
+      // mix of sizes
       val sizes = ctx.rounds(1 to types.size)
-      if (v > 0) for (_ <- 1 to IngestOperators.reads) {
+      if (v > 0) for (_ <- types.indices) {
         val at = 1 + rng.nextInt(v.toInt).toLong
         val subset = rng.shuffle(types).take(sizes.next()).sorted
         ctx.op("read", s"v$at:${subset.mkString("+")}") {
@@ -304,7 +310,4 @@ object IngestOperators {
     */
   val mix: Seq[String] = Seq("q59_dedup_clusters", "q322_filtered_ann", "q252_bpe_encode",
     "q271_recursive_closure", "q238_sketch_order_exec", "q79_train_test_split")
-
-  /** Snapshot reads after the ingest. */
-  val reads = 6
 }
