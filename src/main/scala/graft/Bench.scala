@@ -154,7 +154,7 @@ object Bench {
     // Warm-up: JIT + codegen cache on the smallest SF.
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
 
     // Warm the SHARED warehouse caches at the target SF and report the fill
@@ -170,7 +170,7 @@ object Bench {
         Seq(w.dimDate, w.dimCustomer, w.dimAccount, w.dimMerchant,
           w.dimLocation, w.fact).foreach(_.count())
         (System.nanoTime() - tFill) / 1e9
-      } catch { case _: Throwable => -1.0 }
+      } catch { case scala.util.control.NonFatal(_) => -1.0 }
 
     // A failed query must NOT masquerade as a (tiny, plausible) timing —
     // record failures in their own field so a regression that makes a
@@ -191,7 +191,7 @@ object Bench {
       val runs = Seq.fill(qReps) {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case scala.util.control.NonFatal(_) => false }
         ((System.nanoTime() - t0) / 1e9, ok)
       }
       (name, runs.map(_._1).sorted.apply(qReps / 2), runs.forall(_._2)) // median
@@ -219,7 +219,7 @@ object Bench {
         val (labels, rounds) = graft.operators.Dedup.dedupClustersWithRounds(
           graft.sources.TestData.documents(spark, sfDir))
         (labels.count(), rounds)
-      } catch { case _: Throwable => (-1L, -1) }
+      } catch { case scala.util.control.NonFatal(_) => (-1L, -1) }
 
     // load sentinel: probe + load-avg AFTER the suite too (contention that
     // arrives mid-run must also flag), compared against the committed idle

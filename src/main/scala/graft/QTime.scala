@@ -24,7 +24,7 @@ object QTime {
       // next query instead of aborting the whole run
       val warmOk =
         try { fn(spark, "/root/testdata/sf0.001").count(); true }
-        catch { case t: Throwable => println(s"warmup $n FAILED: $t"); false }
+        catch { case scala.util.control.NonFatal(t) => println(s"warmup $n FAILED: $t"); false }
       if (warmOk) {
         val ts = (1 to reps).map { _ =>
           val t0 = System.nanoTime()

@@ -489,7 +489,7 @@ object ScaleBench {
     // JIT/codegen warm-up on the smallest SF, same as Bench
     measuredRun.foreach { name =>
       try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
 
     // a failed query must NOT masquerade as a plausible timing — record
@@ -543,7 +543,7 @@ object ScaleBench {
           val before = floorSnapshot()
           val t0 = System.nanoTime()
           val ok = try { SparkEntry.queries(name)(spark, dir).count(); true }
-            catch { case _: Throwable => false }
+            catch { case scala.util.control.NonFatal(_) => false }
           val sec = (System.nanoTime() - t0) / 1e9
           if (Bench.FloorDominated(name)) Thread.sleep(150) // listener drain
           val after = floorSnapshot()

@@ -4,8 +4,10 @@ import java.util.EnumSet
 
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path}
 import org.apache.hadoop.fs.Options.CreateOpts
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 
 import graft.functions.OracleSafe
 
@@ -2072,6 +2074,52 @@ object ManifestTable {
       .map(_.stripPrefix(s"$partCol=")).sorted
   }
 
+  /** The one reader of manifest-served partitions. For each source dir
+    * `data/<d>` it reads just the leaf dirs `<partCol>=<name>` that dir
+    * serves, with `basePath` at `data/<d>` so the partition column comes
+    * back from the directory names (unescaped; the default partition as
+    * null) — no filter, nothing else listed. The data schema is inferred
+    * once, from the first source dir, and pinned for the rest (inference
+    * reads footers in a Spark job). The partition column's type is still
+    * inferred per source from its directory names (no job), as a
+    * whole-version read would, and the union widens it: a version that
+    * serves only the default partition cannot pin it to null. A given
+    * `schema` (partition column last) pins both and skips inference.
+    * Up to `spark.sql.sources.parallelPartitionDiscovery.threshold` leaf
+    * dirs per source are listed without a Spark job.
+    */
+  private def readLeaves(spark: SparkSession, tableDir: String,
+      partCol: String, served: Seq[(String, Iterable[String])],
+      schema: Option[StructType] = None): Seq[DataFrame] = {
+    def leaves(d: String, parts: Iterable[String],
+        pinned: Option[StructType]): DataFrame = {
+      val base = s"$tableDir/data/$d"
+      val reader = spark.read.option("basePath", base)
+      pinned.fold(reader)(reader.schema).parquet(
+        parts.toSeq.distinct.sorted.map(p => s"$base/$partCol=$p"): _*)
+    }
+    served match {
+      case Seq() => Seq.empty
+      case (d, parts) +: rest =>
+        val first = leaves(d, parts, schema)
+        val pinned = schema.getOrElse(
+          StructType(first.schema.filterNot(_.name == partCol)))
+        first +: rest.map { case (d, ps) => leaves(d, ps, Some(pinned)) }
+    }
+  }
+
+  /** [[readLeaves]] over `(partition, serving version)` manifest
+    * entries: one read per version dir `v<N>`, in version order, each
+    * paired with its version.
+    */
+  private def readVersionLeaves(spark: SparkSession, tableDir: String,
+      partCol: String, entries: Iterable[(String, Long)],
+      schema: Option[StructType] = None): Seq[(Long, DataFrame)] = {
+    val bySrc = entries.groupBy(_._2).toSeq.sortBy(_._1)
+    bySrc.map(_._1).zip(readLeaves(spark, tableDir, partCol,
+      bySrc.map { case (v, es) => s"v$v" -> es.map(_._1) }, schema))
+  }
+
   /** Write snapshot `version`'s PARTITION MANIFEST: one metadata file
     * mapping each partition value to the version whose files serve it.
     * Exclusive-create — a version's manifest is written once by its
@@ -2133,9 +2181,12 @@ object ManifestTable {
     df.write.mode(SaveMode.Overwrite).partitionBy(partCol)
       .parquet(s"$tableDir/data/v$version")
     val landed = partitionValues(spark, tableDir, version, partCol)
-    require(landed.forall(replaced.contains),
-      s"rows outside the replaced partitions: ${landed.diff(replaced)}")
-    val map = (prevMap -- replaced) ++ landed.map(_ -> version)
+    // manifest keys are directory names: escape the caller's values the
+    // way the writer does (null and "" as the default partition)
+    val replacedDirs = replaced.map(ExternalCatalogUtils.getPartitionValueString)
+    require(landed.forall(replacedDirs.contains),
+      s"rows outside the replaced partitions: ${landed.diff(replacedDirs)}")
+    val map = (prevMap -- replacedDirs) ++ landed.map(_ -> version)
     writePartitionManifest(spark, tableDir, version, map)
     swapPointer(spark, tableDir, version)
   }
@@ -2156,10 +2207,20 @@ object ManifestTable {
     * idempotent overwrite; between manifest and swap it re-swaps;
     * after the swap it skips. The pointer is never moved backwards.
     *
-    * Scale: per batch the write cost is O(touched partitions' data) —
-    * the read-merge-write shape of a foreachBatch MERGE INTO; at
-    * 100 TB the batch touches the partitions its rows name, never the
-    * table.
+    * Scale: a commit is two Spark jobs and no shuffle, whatever the
+    * table holds. Job one collects the batch's partition values with a
+    * per-task distinct (one stage, no exchange), cast and escaped the
+    * way the writer names directories (null as the default partition),
+    * so they compare with manifest keys.
+    * The previous rows of the touched partitions are read from their
+    * leaf dirs alone under a schema pinned from `df` — no schema
+    * inference, no filter, untouched partitions never listed. Job two
+    * writes batch ∪ those rows, coalesced to ⌈input bytes ÷
+    * `spark.sql.files.maxPartitionBytes`⌉ tasks, the bytes taken from
+    * the plans' statistics (no job, no file-system call): each touched
+    * partition comes out as that many files, not one more per commit.
+    * Write cost stays O(touched partitions' data) — the read-merge-write
+    * shape of a foreachBatch MERGE INTO.
     */
   def appendPartitionedIdempotent(df: DataFrame, tableDir: String,
       version: Long, partCol: String,
@@ -2174,13 +2235,20 @@ object ManifestTable {
     } else {
       val prevMap = if (version == 1L) Map.empty[String, Long]
         else readPartitionManifest(spark, tableDir, version - 1)
-      val touched = df.select(partCol).distinct().collect()
-        .map(_.get(0).toString).toSeq.sorted // bounded by |partitions|
-      val merged = if (prevMap.isEmpty) df
-        else readPartitionedVersion(spark, tableDir, partCol, version - 1)
-          .filter(col(partCol).isin(touched.map(x => x: Any): _*))
-          .unionByName(df)
-      merged.write.mode(SaveMode.Overwrite).partitionBy(partCol)
+      val touched = df.select(col(partCol).cast(StringType))
+        .as(Encoders.STRING).mapPartitions(_.toSet.iterator)(Encoders.STRING)
+        .collect().iterator.map(ExternalCatalogUtils.getPartitionValueString)
+        .toSet
+      val pinned = StructType(
+        df.schema.filterNot(_.name == partCol) :+ df.schema(partCol))
+      val carried = readVersionLeaves(spark, tableDir, partCol,
+        prevMap.filter(e => touched(e._1)), Some(pinned)).map(_._2)
+      val bytes = (df +: carried)
+        .map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+      val target = spark.sessionState.conf.filesMaxPartitionBytes
+      val tasks = ((bytes + target - 1) / target).max(1).min(Int.MaxValue)
+      carried.foldLeft(df)(_ unionByName _).coalesce(tasks.toInt)
+        .write.mode(SaveMode.Overwrite).partitionBy(partCol)
         .parquet(s"$tableDir/data/v$version")
       val landed = partitionValues(spark, tableDir, version, partCol)
       writePartitionManifest(spark, tableDir, version,
@@ -2550,14 +2618,10 @@ object ManifestTable {
     * over the partition-mapped table.
     */
   def readPartitionedVersion(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long): DataFrame = {
-    val map = readPartitionManifest(spark, tableDir, version)
-    map.groupBy(_._2).toSeq.sortBy(_._1).map { case (srcV, entries) =>
-      spark.read.parquet(s"$tableDir/data/v$srcV")
-        .filter(col(partCol)
-          .isin(entries.keys.toSeq.sorted.map(x => x: Any): _*))
-    }.reduce(_ unionByName _)
-  }
+      partCol: String, version: Long): DataFrame =
+    readVersionLeaves(spark, tableDir, partCol,
+      readPartitionManifest(spark, tableDir, version))
+      .map(_._2).reduce(_ unionByName _)
 
   /** q312 — SNAPSHOT ROLLBACK end to end: v1 publishes all partitions;
     * v2 fat-fingers a 100× re-price of the purchase partition (the
@@ -2916,17 +2980,11 @@ object ManifestTable {
     * [[compactPartitionedMoR]] exists to bound.
     */
   def readPartitionedMoR(spark: SparkSession, tableDir: String,
-      partCol: String, version: Long): DataFrame = {
-    val map = readDeltaManifest(spark, tableDir, version)
-    val bySrc = map.toSeq
-      .flatMap { case (p, vs) => vs.map(v => (v, p)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    bySrc.map { case (srcV, entries) =>
-      spark.read.parquet(s"$tableDir/data/v$srcV")
-        .filter(col(partCol)
-          .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-    }.reduce(_ unionByName _)
-  }
+      partCol: String, version: Long): DataFrame =
+    readVersionLeaves(spark, tableDir, partCol,
+      readDeltaManifest(spark, tableDir, version).toSeq
+        .flatMap { case (p, vs) => vs.map(p -> _) })
+      .map(_._2).reduce(_ unionByName _)
 
   // ---------------------------------------------------------------- q327
 
@@ -3207,16 +3265,11 @@ object ManifestTable {
     */
   def readPartitionedMoRKeyed(spark: SparkSession, tableDir: String,
       partCol: String, keyCol: String, version: Long): DataFrame = {
-    val map = readDeltaManifest(spark, tableDir, version)
-    val bySrc = map.toSeq
-      .flatMap { case (p, vs) => vs.map(v => (v, p)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-    val tagged = bySrc.map { case (srcV, entries) =>
-      spark.read.parquet(s"$tableDir/data/v$srcV")
-        .filter(col(partCol)
-          .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-        .withColumn("_commit_version", lit(srcV))
-    }.reduce(_ unionByName _)
+    val tagged = readVersionLeaves(spark, tableDir, partCol,
+        readDeltaManifest(spark, tableDir, version).toSeq
+          .flatMap { case (p, vs) => vs.map(p -> _) })
+      .map { case (v, df) => df.withColumn("_commit_version", lit(v)) }
+      .reduce(_ unionByName _)
     val cols = tagged.columns.filter(_ != "_commit_version")
     tagged
       .groupBy(col(keyCol).as("_k"))
@@ -3397,14 +3450,12 @@ object ManifestTable {
     */
   def readPartitionedTxn(spark: SparkSession, tableDir: String,
       partCol: String, version: Long): DataFrame = {
-    val map = readTxnManifest(spark, tableDir, version)
-    map.toSeq.flatMap { case (p, ds) => ds.map(d => (d, p)) }
-      .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (d, entries) =>
-        spark.read.parquet(s"$tableDir/data/$d")
-          .filter(col(partCol)
-            .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-      }.reduce(_ unionByName _)
+    readLeaves(spark, tableDir, partCol,
+      readTxnManifest(spark, tableDir, version).toSeq
+        .flatMap { case (p, ds) => ds.map(d => (d, p)) }
+        .groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (d, entries) => d -> entries.map(_._2) })
+      .reduce(_ unionByName _)
   }
 
   /** Compaction as just another CAS committer: resolve the head's
@@ -3646,14 +3697,10 @@ object ManifestTable {
       broadcastMaxBytes: Long = 64L << 20): DataFrame = {
     val map = readPosManifest(spark, tableDir, version)
     def baseOf(parts: Map[String, (Seq[Long], Seq[Long])]): DataFrame =
-      parts.toSeq.flatMap { case (p, (bs, _)) => bs.map(v => (v, p)) }
-        .groupBy(_._1).toSeq.sortBy(_._1)
-        .map { case (srcV, entries) =>
-          spark.read.parquet(s"$tableDir/data/v$srcV")
-            .filter(col(partCol)
-              .isin(entries.map(_._2).distinct.sorted.map(x => x: Any): _*))
-            .withColumn("_src_version", lit(srcV))
-        }.reduce(_ unionByName _)
+      readVersionLeaves(spark, tableDir, partCol,
+          parts.toSeq.flatMap { case (p, (bs, _)) => bs.map(p -> _) })
+        .map { case (v, df) => df.withColumn("_src_version", lit(v)) }
+        .reduce(_ unionByName _)
     val (touched, untouched) = map.partition(_._2._2.nonEmpty)
     val clean = if (untouched.isEmpty) None else Some(baseOf(untouched))
     val merged = if (touched.isEmpty) None else {

@@ -1122,12 +1122,18 @@ object EventStream {
     * touched partitions are rewritten as previous-content ∪ batch-rows
     * (read BY VERSION, never the pointer), untouched partitions carried
     * by reference, version = batchId + 1 so each commit is a pure
-    * function of the batch. A crash is injected AFTER batch 1's commit
-    * but before its checkpoint commit (the q231/q242 uncovered window);
-    * the restart REPLAYS batch 1 and the idempotent commit detects the
-    * existing manifest and SKIPS — a double-apply would double batch
-    * 1's rows and break the oracle hash, so exact totals ARE the
-    * exactly-once proof. The attempt markers prove the replay happened.
+    * function of the batch. Each commit is two Spark jobs and no
+    * shuffle: a one-stage collect of the batch's partition values, then
+    * one write of batch ∪ the touched partitions' previous rows, read
+    * from their leaf dirs under a schema pinned from the batch and
+    * coalesced by input bytes, so a partition keeps about one file per
+    * target-sized chunk however many batches touch it. A crash is
+    * injected AFTER batch 1's commit but before its checkpoint commit
+    * (the q231/q242 uncovered window); the restart REPLAYS batch 1 and
+    * the idempotent commit detects the existing manifest and SKIPS — a
+    * double-apply would double batch 1's rows and break the oracle
+    * hash, so exact totals ARE the exactly-once proof. The attempt
+    * markers prove the replay happened.
     *
     * Scale: per batch the write is O(touched partitions), the
     * streaming analog of dynamic partition overwrite; the final serve

@@ -1340,4 +1340,113 @@ class ManifestTableSpec extends SparkSpec {
         .filter(_._2._1 > 0L) == phys)
     } finally graft.Scratch.rmTree(out.toFile)
   }
+
+  test("hostile partition values: append, replay, overwrite and the MoR splice serve every row") {
+    val out = java.nio.file.Files.createTempDirectory("graft-hostile")
+    try {
+      // '/', ' ', '%', '=' and null all reach directory names escaped (or
+      // as the default partition); the manifests must key them the same way
+      val values = Seq("a/b", "x y", "50%", "k=v", null)
+      def batch(from: Long, n: Int): Seq[(Long, String, Double)] =
+        (from until from + n).map(id =>
+          (id, values((id % values.size).toInt), id * 2.0))
+      val b1 = batch(0L, 10)
+      val b2 = batch(10L, 7)
+      val b3 = batch(17L, 3)
+      def frame(rs: Seq[(Long, String, Double)]) =
+        rs.toDF("event_id", "event_type", "value")
+      def served(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("event_type").agg(count(lit(1)), sum("value")).collect()
+          .map(r => Option(r.getString(0)) -> (r.getLong(1), r.getDouble(2)))
+          .toMap
+      def expected(rs: Seq[(Long, String, Double)]) =
+        rs.groupBy(r => Option(r._2))
+          .map { case (k, g) => k -> (g.size.toLong, g.map(_._3).sum) }
+      val cow = s"$out/cow"
+      def live() = served(ManifestTable.readPartitioned(spark, cow, "event_type"))
+      assert(ManifestTable.appendPartitionedIdempotent(frame(b1), cow, 1L, "event_type"))
+      assert(live() == expected(b1))
+      assert(ManifestTable.appendPartitionedIdempotent(frame(b2), cow, 2L, "event_type"))
+      assert(live() == expected(b1 ++ b2))
+      assert(ManifestTable.appendPartitionedIdempotent(frame(b3), cow, 3L, "event_type"))
+      assert(live() == expected(b1 ++ b2 ++ b3))
+      // a replay of v2 skips: nothing doubles, time travel still serves v2
+      assert(!ManifestTable.appendPartitionedIdempotent(frame(b2), cow, 2L, "event_type"))
+      assert(live() == expected(b1 ++ b2 ++ b3))
+      assert(served(ManifestTable.readPartitionedVersion(spark, cow, "event_type", 2L))
+        == expected(b1 ++ b2))
+      // dynamic overwrite by raw values: re-price a/b, delete the nulls
+      val repriced = (b1 ++ b2 ++ b3).filter(_._2 == "a/b")
+        .map { case (id, p, v) => (id, p, v * 10) }
+      ManifestTable.overwritePartitions(frame(repriced), cow, 4L,
+        "event_type", Seq("a/b", null))
+      assert(live() == expected(
+        (b1 ++ b2 ++ b3).filter(r => r._2 != "a/b" && r._2 != null) ++ repriced))
+      // the merge-on-read form splices the same rows back, its first
+      // source version serving only the default (null) partition
+      val mor = s"$out/mor"
+      val (nulls, named) = b1.partition(_._2 == null)
+      Seq(nulls, named ++ b2, b3).zipWithIndex.foreach { case (b, i) =>
+        assert(ManifestTable.appendPartitionedDelta(frame(b), mor, i + 1L, "event_type"))
+      }
+      assert(served(ManifestTable.readPartitionedMoR(spark, mor, "event_type", 3L))
+        == expected(b1 ++ b2 ++ b3))
+    } finally graft.Scratch.rmTree(out.toFile)
+  }
+
+  test("a partitioned append commits in two jobs, no shuffle, and bounded files per partition") {
+    import org.apache.spark.scheduler._
+    val out = java.nio.file.Files.createTempDirectory("graft-commit-cost")
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val shuffleTasks = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+    val stageGroup = new java.util.concurrent.ConcurrentHashMap[Integer, String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("commit-cost-")).foreach { g =>
+            jobs.merge(g, 1, (a, b) => a + b)
+            e.stageIds.foreach(stageGroup.put(_, g))
+          }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ShuffleMapTask")
+          Option(stageGroup.get(e.stageId))
+            .foreach(shuffleTasks.merge(_, 1, (a, b) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val tbl = s"$out/tbl"
+      (1 to 20).foreach { v =>
+        // 40 local rows, split over the session's parallelism (several
+        // input tasks, no exchange); v1 also lands a cold partition
+        val rows = (0 until 40).map(i => (v * 100L + i, "hot", i * 1.0)) ++
+          (if (v == 1) Seq((0L, "cold", 1.0)) else Nil)
+        sc.setJobGroup(s"commit-cost-$v", s"append v$v")
+        try assert(ManifestTable.appendPartitionedIdempotent(
+          rows.toDF("event_id", "event_type", "value"),
+          tbl, v.toLong, "event_type"))
+        finally sc.clearJobGroup()
+      }
+      org.apache.spark.graftbridge.ListenerDrain(sc)
+      (2 to 20).foreach { v =>
+        val g = s"commit-cost-$v"
+        assert(Option(jobs.get(g)).exists(_ <= 2), s"v$v ran ${jobs.get(g)} jobs")
+        assert(!shuffleTasks.containsKey(g), s"v$v ran ${shuffleTasks.get(g)} shuffle tasks")
+      }
+      // the hot partition's newest dir holds ~one file per target-sized
+      // chunk, not one more file per commit
+      val files = new java.io.File(s"$tbl/data/v20/event_type=hot").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      val target = spark.sessionState.conf.filesMaxPartitionBytes
+      val bound = (files.map(_.length).sum + target - 1) / target + 1
+      assert(files.length <= bound, s"${files.length} files > $bound")
+      assert(ManifestTable.readPartitionManifest(spark, tbl, 20L)
+        == Map("hot" -> 20L, "cold" -> 1L))
+      assert(totals(ManifestTable.readPartitioned(spark, tbl, "event_type"))
+        == Map("hot" -> 800L, "cold" -> 1L))
+    } finally {
+      sc.removeSparkListener(listener)
+      graft.Scratch.rmTree(out.toFile)
+    }
+  }
 }
